@@ -69,5 +69,24 @@ def load_reference_utils():
     )
     mod = importlib.util.module_from_spec(spec)
     sys.modules["ref_utils"] = mod
-    spec.loader.exec_module(mod)
+    try:
+        spec.loader.exec_module(mod)
+    except BaseException:
+        # a half-loaded module would hand the next caller a misleading
+        # AttributeError instead of the real failure (e.g. a missing
+        # reference checkout)
+        del sys.modules["ref_utils"]
+        raise
     return mod
+
+
+class _LazyReferenceUtils:
+    """Stands in for the reference utils module and loads it on first
+    attribute access, so a missing reference checkout fails each parity
+    test with its real error while the file's other tests still run."""
+
+    def __getattr__(self, name):
+        return getattr(load_reference_utils(), name)
+
+
+reference_utils = _LazyReferenceUtils()

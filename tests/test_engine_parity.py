@@ -103,27 +103,19 @@ def test_engine_dedupe_inference_is_transparent(spark):
     )
     schema = {"竞赛名称": ["主办方"]}
     o = flat_spans(OracleUIE(schema).extract(texts))
-    # dedupe_inference=False is a deprecated no-op — the engine warns
-    # and dedups anyway; assert the warning instead of emitting it
-    # into the suite's output (round-5 verdict nit).
-    with pytest.warns(DeprecationWarning, match="dedupe_inference"):
-        eng_off = UIEEngine(spark, schema, UIEConfig(dedupe_inference=False))
-    out = eng_off.extract(docs)
-    collected = out.collect()
+    collected = UIEEngine(spark, schema, UIEConfig()).extract(docs).collect()
     rows = Counter(
         (r["doc_id"], r["node_path"], r["text"], r["start"], r["end"],
          r["parent_text"], r["parent_start"])
         for r in collected
     )
     assert max(rows.values()) == 1, "duplicate result rows emitted"
-    off = {
+    spans = {
         (r["doc_id"], r["node_path"], r["text"], r["start"], r["end"],
          round(r["prob"], 6))
         for r in collected
     }
-    assert off == o
-    on = _spark_sets(UIEEngine(spark, schema, UIEConfig(dedupe_inference=True)).extract(docs))[0]
-    assert on == o
+    assert spans == o
 
 
 def test_engine_long_docs_chunk_merge(spark):

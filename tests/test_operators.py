@@ -295,19 +295,6 @@ def test_engine_ops_metrics_accumulators(spark):
     assert m["decoded_spans"] * 8 >= n_spans  # spans fan back out via join
 
 
-def test_dedupe_inference_false_warns(spark):
-    """The flag is a documented no-op (dedup is unconditional); callers
-    passing False must get a runtime signal."""
-    import warnings
-
-    from uie_pytorch_spark.engine import UIEConfig, UIEEngine
-
-    with warnings.catch_warnings(record=True) as w:
-        warnings.simplefilter("always")
-        UIEEngine(spark, ["标签"], UIEConfig(dedupe_inference=False))
-    assert any(issubclass(x.category, DeprecationWarning) for x in w)
-
-
 def test_jaccard_candidates_pushdown_matches_allpairs(spark):
     """The candidate-pair fast path (pair-list joined to per-doc
     shingle sets, no all-pairs blow-up) must agree exactly with the

@@ -4,6 +4,8 @@ clean run and that done partitions are skipped."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -68,3 +70,19 @@ def test_resume_produces_identical_output(spark, tmp_path):
     )
     assert sorted(r["part_key"] for r in per_part) == [0, 1, 2, 3]
     assert all(r["count"] == 1 for r in per_part)
+
+
+def test_corrupt_lineage_raises_instead_of_restarting(spark, tmp_path):
+    """Only a missing lineage table means "no progress": one that exists
+    but cannot be read must fail the run, not silently reprocess every
+    partition."""
+    run = CheckpointedRun(spark, str(tmp_path / "out"), run_id="r1", buckets=2)
+    os.makedirs(run.lineage_path)
+    with open(os.path.join(run.lineage_path, "part-00000.parquet"), "w") as f:
+        f.write("not a parquet file")
+    extracted = []
+    pages = fixture_web_pages(spark, n_docs=4, seed=9)
+    with pytest.raises(Exception, match="is not a Parquet file"):
+        run.run(pages, extracted.append)
+    assert extracted == []
+    assert not os.path.exists(run.triples_path)

@@ -7,10 +7,8 @@ import math
 from hypothesis import given
 from hypothesis import strategies as st
 
-from refimport import load_reference_utils
+from refimport import reference_utils as ref
 from uie_pytorch_spark.core import textnorm as T
-
-ref = load_reference_utils()
 
 _text_st = st.text(
     alphabet=st.characters(codec="utf-8", exclude_categories=("Cs",)),

@@ -8,11 +8,9 @@ import json
 import pytest
 from pyspark.sql import functions as F
 
-from refimport import load_reference_utils
+from refimport import reference_utils as ref
 from uie_pytorch_spark.operators import training as TR
 from uie_pytorch_spark.sources import annotations as A
-
-ref = load_reference_utils()
 
 
 # ---------- A3 train-side window re-chunk vs reference reader ----------

@@ -171,13 +171,6 @@ class UIEConfig:
     position_prob: float = 0.5
     lang: str = "zh"
     split_sentence: bool = False
-    # DEPRECATED no-op, kept for API compat: identical (prompt, chunk)
-    # rows are ALWAYS deduplicated before inference — with duplicates
-    # present, the key join-back would multiply span records per owner
-    # row (each duplicate's records attach to every duplicate).
-    dedupe_inference: bool = True
-    # partitions for the inference stage; None -> leave to AQE
-    infer_partitions: Optional[int] = None
     # model artifact seam: path to a saved .npz (core.model.save_weights)
     # shipped to executors via sc.addFile / --files / spark.archives;
     # None -> regenerate TinyUIE from `seed` in-process.
@@ -214,17 +207,6 @@ class UIEEngine:
     def __init__(self, spark: SparkSession, schema, config: UIEConfig | None = None):
         self.spark = spark
         self.config = config or UIEConfig()
-        if not self.config.dedupe_inference:
-            import warnings
-
-            warnings.warn(
-                "UIEConfig.dedupe_inference=False is ignored: identical "
-                "(prompt, chunk) rows are ALWAYS deduplicated before "
-                "inference (duplicates would multiply span records "
-                "through the key join-back).",
-                DeprecationWarning,
-                stacklevel=2,
-            )
         self.tree = build_tree(schema)
         # ops metrics (north rule: lineage + METRICS): accumulators
         # tick as inference tasks run — zero-cost observability of the
@@ -531,7 +513,7 @@ class UIEEngine:
         # is compute-bound, not size-bound — AQE's size-based
         # coalescing would shrink the tiny post-distinct shuffle to 1
         # partition and serialize all model work on one core.
-        # Round 6: default dropped from 2x to 1x defaultParallelism —
+        # Round 6: dropped from 2x to 1x defaultParallelism —
         # one task wave instead of two. Rows are spread evenly by the
         # 64-bit dedup hash and the bucketed kernel bounds per-row cost
         # variance, so the finer 2x granularity bought no balance but
@@ -540,10 +522,9 @@ class UIEEngine:
         # (measured 9.2 s -> 7.4 s on the sf0.1 flagship at 32 cores;
         # stragglers from slow NODES are speculative execution's job,
         # not the partition count's).
-        n_parts = self.config.infer_partitions or (
-            self.spark.sparkContext.defaultParallelism
+        infer_in = infer_in.repartition(
+            self.spark.sparkContext.defaultParallelism, "key"
         )
-        infer_in = infer_in.repartition(n_parts, "key")
         records = infer_in.mapInArrow(self._infer_udf, schema=_INFER_SCHEMA)
         # both the span branch and the cls-vote branch scan `records`;
         # without a persist the model would run TWICE per stage

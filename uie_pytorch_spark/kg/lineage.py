@@ -23,6 +23,7 @@ import time
 from dataclasses import dataclass
 from typing import Callable, List
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -68,8 +69,12 @@ class CheckpointedRun:
     def completed_partitions(self) -> List[int]:
         try:
             lin = self.spark.read.parquet(self.lineage_path)
-        except Exception:
-            return []
+        except AnalysisException as e:
+            # only "no lineage yet" means no progress; a lineage table
+            # that exists but cannot be read must not restart the run
+            if e.getCondition() == "PATH_NOT_FOUND":
+                return []
+            raise
         rows = (
             lin.filter(
                 (F.col("run_id") == self.run_id) & (F.col("status") == "done")

@@ -1,120 +1,85 @@
-"""ANSI-SQL front door for the analytics engine (VERDICT r3 item 9).
+"""ANSI-SQL front door for the analytics engine.
 
 The engine's operators are DataFrame-first; this module exposes the
 relational tier through ``spark.sql`` over registered temp views, so a
 SQL-only consumer can run the same queries the DataFrame API serves —
 and so each query's semantics are pinned three ways: DataFrame plan,
-Spark SQL text, and the DuckDB oracle (queries.py), all hash-equal.
+Spark SQL text, and the DuckDB oracle (queries.ORACLE_SQL), all
+hash-equal.
 
-The SQL here is Spark dialect. It intentionally mirrors the DuckDB
-oracle text (queries.py) with only the dialect-forced differences:
-  * ``len(regexp_extract_all(s, p))``  -> ``size(regexp_extract_all(s, p, 0))``
-  * ``regexp_replace(s, p, r, 'g')``   -> 3-arg (Spark is global)
-  * ``unnest(...)``                    -> ``explode(...)`` / LATERAL VIEW
-  * ``epoch(ts)``                      -> double-cast via TIMESTAMP (LTZ;
-                                          Spark 4 ANSI forbids NTZ->DOUBLE)
-  * ``ASOF LEFT JOIN``                 -> union-tag + running
-                                          last(ignorenulls) window (the
-                                          same shape operators.temporal
-                                          uses — Spark has no ASOF syntax)
-  * regex literals double their backslashes (Spark string literals
-    treat ``\\`` as an escape; DuckDB's do not)
-Both are plain ANSI aggregations/joins/windows, so Catalyst produces
-the same physical plans it gives the DataFrame versions (broadcast
-dims, partial aggs, single window sort per spec).
+Each query is written once, in the oracle. Its Spark text is derived by
+``spark_dialect``, which rewrites only code outside string literals and
+scopes every function rule to that function's own argument list:
 
-Coverage: every oracle query EXCEPT the model-backed tier
-(uie_entities / uie_nested_export / kg_canonical_entities — the
-extraction model and the iterative connected-components step are not
-SQL-expressible) and the two near-dup CC queries (same CC step:
-Spark 4's WITH RECURSIVE accepts only UNION ALL
-[UNION_NOT_SUPPORTED_IN_RECURSIVE_CTE], which cannot reach a
-fixpoint on a cyclic edge set, so DuckDB's recursive
-label-propagation CTE has no Spark SQL rendering). All
-families are covered: aggregation, join, window, dedup
-(exact/minhash/LSH/CDC/simhash/jaccard), textstats, temporal
-(asof/sessionize/range join), similarity/ANN (brute/SRP/IVF), KG
-(edges/degrees/graph algorithms/maintenance/RDF export), and corpus
-profiling (skew/quantiles/split/mix-sampling).
+  * string literals are re-escaped: DuckDB's ``''`` becomes ``\\'``
+    and a backslash is doubled (Spark literals treat ``\\`` as an
+    escape; DuckDB's do not)
+  * ``VARCHAR`` -> ``STRING``
+  * an unsuffixed decimal literal becomes a double (``1.0`` -> ``1.0d``):
+    Spark parses ``1.0`` as DECIMAL, while DuckDB's decimal/int
+    division already returns DOUBLE
+  * ``regexp_replace(s, p, r, 'g')`` -> 3-arg form (Spark's is global);
+    the 3-arg DuckDB form replaces the first match only and is rejected
+  * ``regexp_extract_all(s, p)`` -> ``regexp_extract_all(s, p, 0)``
+    (Spark's default group is 1)
+  * ``len`` / ``unnest`` / ``generate_series`` / ``quantile_cont`` /
+    ``array_to_string`` / ``list_sort`` / ``list_distinct`` ->
+    ``size`` / ``explode`` / ``sequence`` / ``percentile`` /
+    ``array_join`` / ``array_sort`` / ``array_distinct``
+  * ``string_split(s, 'sep')`` -> ``split(s, <sep regex-quoted>)``
+    (DuckDB splits on the literal, Spark's ``split`` takes a regex);
+    ``string_split_regex`` -> ``split``
+  * ``a // b`` -> ``a DIV b``
+  * h60 ``(('0x' || X)::bigint)`` -> ``(CAST(conv(X, 16, 10) AS BIGINT))``
+  * ``epoch(x)`` -> ``CAST(CAST(x AS TIMESTAMP) AS DOUBLE)`` (fractional
+    seconds; Spark 4 ANSI forbids NTZ -> DOUBLE, so go via LTZ)
+  * a 1-based list index ``a[i]`` -> ``element_at(a, CAST(i AS INT))``
+  * ``string_agg(x, s ORDER BY y)`` ->
+    ``listagg(x, s) WITHIN GROUP (ORDER BY y)``
+
+``generate_series`` -> ``sequence`` assumes start <= stop: Spark's
+``sequence(1, 0)`` counts down where DuckDB returns an empty list.
+
+Explicit Spark text remains only where the oracle cannot be rewritten:
+  * ``asof_join_events`` — Spark has no ASOF JOIN; rendered as a
+    union-tag + running ``last(ignorenulls)`` window (the shape
+    operators.temporal uses)
+  * ``benchmark_decontaminate`` — ``list_slice``, and its
+    ``generate_series(1, 0)`` must be empty (see above)
+  * ``canonicalize_surface_forms`` — a generator nested inside an
+    expression, which Spark does not allow
+  * ``phrase_match_positions`` — ``generate_subscripts``; rendered with
+    posexplode's 0-based index + 1
+  * ``kg_link_mentions`` / ``kg_random_walks`` — the oracle's
+    ``unnest(..) AS t(tok)`` table function and ``list(x ORDER BY x)``;
+    built from the shared ``_pagerank_ctes`` / ``_walks_sql`` skeletons
+    with the Spark tail or neighbor-list aggregate, then rewritten
+
+Not covered: the model-backed tier (uie_entities / uie_nested_export /
+kg_canonical_entities — the extraction model and the iterative
+connected-components step are not SQL-expressible) and the two near-dup
+CC queries (same CC step: Spark 4's WITH RECURSIVE accepts only UNION
+ALL [UNION_NOT_SUPPORTED_IN_RECURSIVE_CTE], which cannot reach a
+fixpoint on a cyclic edge set).
 """
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame, SparkSession
 
-from .core.textnorm import DBC_FROM, DBC_TO
-from .operators.hashing import MINHASH_COEFFS, MINHASH_PRIME
-from .queries import _CDC_FOOTER, _IVF_C, _IVF_PROBE, _SRP_PLANES, _SRP_SEED
-
-_H60 = "CAST(conv(substring(md5({0}), 1, 15), 16, 10) AS BIGINT)"
-_PERMS = ", ".join(
-    f"({i}, {a}, {b})" for i, (a, b) in enumerate(MINHASH_COEFFS[:12])
-)
-# fractional epoch seconds, NTZ-safe (see operators.temporal._epoch_seconds)
-_EPOCH = "CAST(CAST({0} AS TIMESTAMP) AS DOUBLE)"
-
-
-def _lit(s: str) -> str:
-    """Spark SQL single-quoted string literal (backslash-escaping)."""
-    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
-
-
-# embedding flattened to (vec_id, i, xd) in exact DECIMAL(9,6) — the
-# oracle-grade dot-product layout (operators/similarity.py:28)
-_EMB_DEC = """
-          SELECT vec_id, i, CAST(x AS DECIMAL(9,6)) AS xd
-          FROM embeddings LATERAL VIEW posexplode(embedding) g AS i, x
-"""
-# integer micro-unit layout (exact cross-engine dots, similarity.py)
-_EMB_MICRO = """
-          SELECT vec_id, i,
-                 CAST(round(CAST(x AS DOUBLE) * 1000000) AS BIGINT) AS xi
-          FROM embeddings LATERAL VIEW posexplode(embedding) g AS i, x
-"""
-# content-defined-chunking segmentation over {src}: a position starts
-# a segment when the 60-bit hash of its width-5 window hits % 64 == 0
-# (operators/dedup.py cdc_segments, same rule as the DuckDB oracle)
-_CDC_SEG = f"""
-      d AS (
-        SELECT doc_id, text, length(text) AS n
-        FROM {{src}} WHERE length(text) > 0
-      ),
-      pos AS (
-        SELECT doc_id, text, n, i FROM d
-        LATERAL VIEW explode(sequence(1, greatest(n - 4, 1))) g AS i
-      ),
-      bnd AS (
-        SELECT doc_id, text, n, i FROM pos
-        WHERE i = 1 OR {_H60.format("substring(text, i, 5)")} % 64 = 0
-      ),
-      seg AS (
-        SELECT doc_id,
-               CAST(row_number() OVER w AS INT) AS seg_idx,
-               CAST(i AS INT) AS seg_start,
-               CAST(coalesce(lead(i) OVER w, n + 1) - i AS INT) AS seg_len,
-               text
-        FROM bnd
-        WINDOW w AS (PARTITION BY doc_id ORDER BY i)
-      ),
-      segs AS (
-        SELECT doc_id, seg_idx, seg_start, seg_len,
-               md5(substring(text, seg_start, seg_len)) AS seg_hash
-        FROM seg
-      )
-"""
-_SRP_SIGN = (
-    "CASE WHEN "
-    + _H60.format(
-        f"CAST({_SRP_SEED} AS STRING) || '#' || CAST(plane AS STRING)"
-        " || '#' || CAST(i AS STRING)"
-    )
-    + " % 2 = 0 THEN 1 ELSE -1 END"
-)
+from .queries import ORACLE_SQL, _pagerank_ctes, _walks_sql
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings",
 ]
+
+NOT_SQL = frozenset({
+    "uie_entities", "uie_nested_export", "kg_canonical_entities",
+    "dedup_near_canonical", "dedup_near_canonical_capped",
+})
 
 
 def register_views(
@@ -127,401 +92,190 @@ def register_views(
         spark.read.parquet(f"{sf_dir}/{t}.parquet").createOrReplaceTempView(t)
 
 
-# Spark-dialect SQL, column-for-column aliased like the DataFrame
-# queries (queries.py) so results hash-compare equal.
-SQL_QUERIES = {
-    "agg_pricing_summary": """
-        SELECT l_returnflag, l_linestatus,
-               CAST(sum(l_quantity) AS DOUBLE) AS sum_qty,
-               CAST(sum(l_extendedprice) AS DOUBLE) AS sum_base_price,
-               CAST(sum(l_extendedprice * (1 - l_discount)) AS DOUBLE)
-                   AS sum_disc_price,
-               CAST(avg(l_quantity) AS DOUBLE) AS avg_qty,
-               CAST(count(*) AS BIGINT) AS count_order
-        FROM lineitem
-        GROUP BY l_returnflag, l_linestatus
-    """,
-    "join_broadcast_dims": """
-        SELECT n.n_name AS nation, CAST(count(*) AS BIGINT) AS n_orders,
-               CAST(sum(o.o_totalprice) AS DOUBLE) AS revenue
-        FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
-                      JOIN nation n   ON c.c_nationkey = n.n_nationkey
-        WHERE o.o_orderstatus = 'F'
-        GROUP BY n.n_name
-    """,
-    "topk_per_group": """
-        SELECT * FROM (
-          SELECT o_custkey, o_orderkey, o_totalprice,
-                 row_number() OVER (PARTITION BY o_custkey
-                                    ORDER BY o_totalprice DESC, o_orderkey)
-                     AS rnk
-          FROM orders) ranked
-        WHERE rnk <= 3
-    """,
-    "semi_join_exists": """
-        SELECT c.c_custkey FROM customer c
-        WHERE EXISTS (SELECT 1 FROM orders o
-                      WHERE o.o_custkey = c.c_custkey
-                        AND o.o_totalprice > 200000)
-    """,
-    "event_lag_gaps": """
-        WITH e AS (SELECT *, unix_timestamp(ts) AS ts_sec FROM events)
-        SELECT user_id, event_id,
-               ts_sec - lag(ts_sec) OVER w AS gap_sec,
-               CASE WHEN lag(ts_sec) OVER w IS NULL
-                      OR ts_sec - lag(ts_sec) OVER w > 1800
-                    THEN 1 ELSE 0 END AS session_start
-        FROM e
-        WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-    """,
-    "rollup_order_stats": """
-        SELECT coalesce(o_orderstatus, 'ALL') AS status,
-               coalesce(o_orderpriority, 'ALL') AS priority,
-               CAST(count(*) AS BIGINT) AS n,
-               CAST(sum(o_totalprice) AS DOUBLE) AS revenue
-        FROM orders
-        GROUP BY ROLLUP(o_orderstatus, o_orderpriority)
-    """,
-    # ---- window family ------------------------------------------------
-    "window_cumulative_offset": """
-        SELECT o_custkey, o_orderkey,
-               CAST(COALESCE(sum(o_totalprice) OVER (
-                   PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-                 AS DOUBLE) AS cum_before
-        FROM orders
-    """,
-    "vote_max_by": """
-        WITH per_option AS (
-          SELECT user_id, event_type,
-                 CAST(count(*) AS BIGINT) AS cnt,
-                 CAST(sum(value) AS DOUBLE) AS sum_value
-          FROM events GROUP BY user_id, event_type
-        ), ranked AS (
-          SELECT *, row_number() OVER (
-            PARTITION BY user_id
-            ORDER BY cnt DESC, sum_value DESC, event_type DESC) AS rn
-          FROM per_option
-        )
-        SELECT user_id, event_type AS winner, cnt,
-               sum_value / cnt AS mean_value
-        FROM ranked WHERE rn = 1
-    """,
-    # ---- join family ---------------------------------------------------
-    "anti_join_negatives": """
-        SELECT c.c_custkey, c.c_name
-        FROM customer c LEFT ANTI JOIN
-             (SELECT * FROM orders WHERE o_totalprice > 300000) o
-          ON c.c_custkey = o.o_custkey
-    """,
-    "prompt_expansion_join": """
-        SELECT p.p_partkey, r.r_name,
-               p.p_type || '的' || r.r_name AS prompt
-        FROM part p CROSS JOIN region r
-        WHERE p.p_size > 40
-    """,
-    "double_dim_join": """
-        SELECT ns.n_name AS supp_nation, nc.n_name AS cust_nation,
-               CAST(count(*) AS BIGINT) AS n_lineitems,
-               CAST(sum(l.l_extendedprice) AS DOUBLE) AS volume
-        FROM lineitem l
-          JOIN supplier s ON l.l_suppkey = s.s_suppkey
-          JOIN orders o   ON l.l_orderkey = o.o_orderkey
-          JOIN customer c ON o.o_custkey = c.c_custkey
-          JOIN nation ns  ON s.s_nationkey = ns.n_nationkey
-          JOIN nation nc  ON c.c_nationkey = nc.n_nationkey
-        GROUP BY ns.n_name, nc.n_name
-    """,
-    "cross_join_negatives": """
-        WITH subjects AS (SELECT DISTINCT p_brand FROM part),
-             predicates AS (SELECT DISTINCT p_size FROM part),
-             positives AS (SELECT DISTINCT p_brand, p_size FROM part)
-        SELECT s.p_brand, p.p_size
-        FROM (subjects s CROSS JOIN predicates p) LEFT ANTI JOIN positives pos
-          ON s.p_brand = pos.p_brand AND p.p_size = pos.p_size
-    """,
-    "span_metric_prf": """
-        WITH pred AS (SELECT event_id FROM events WHERE value > 150),
-             gold AS (SELECT event_id FROM events WHERE event_type = 'error'),
-             correct AS (SELECT CAST(count(*) AS BIGINT) c
-                         FROM pred JOIN gold USING (event_id))
-        SELECT (SELECT c FROM correct) AS num_correct,
-               (SELECT CAST(count(*) AS BIGINT) FROM pred) AS num_infer,
-               (SELECT CAST(count(*) AS BIGINT) FROM gold) AS num_label,
-               (SELECT c FROM correct) * 1.0d
-                 / (SELECT count(*) FROM pred) AS precision_,
-               (SELECT c FROM correct) * 1.0d
-                 / (SELECT count(*) FROM gold) AS recall_
-    """,
-    # ---- aggregation family ---------------------------------------------
-    "distinct_labels": "SELECT DISTINCT event_type AS label FROM events",
-    "hourly_event_rollup": """
-        SELECT date_trunc('hour', ts) AS hour_bucket, event_type,
-               CAST(count(*) AS BIGINT) AS n,
-               CAST(sum(value) AS DOUBLE) AS total_value
-        FROM events GROUP BY 1, 2
-    """,
-    "unify_prompt_name": """
-        SELECT p_partkey,
-               p_brand || '[' ||
-               array_join(array_sort(array_distinct(
-                   split(p_type || ',' || p_brand, ','))), ',')
-               || ']' AS unified
-        FROM part
-    """,
-    # ---- dedup family ---------------------------------------------------
-    "dedup_exact": """
-        WITH corpus AS (
-          SELECT doc_id, text FROM documents
-          UNION ALL
-          SELECT doc_id + 1000000 AS doc_id, text
-          FROM documents WHERE doc_id % 25 = 0
-        )
-        SELECT md5(text) AS content_hash,
-               CAST(count(*) AS BIGINT) AS n_dups,
-               CAST(min(doc_id) AS BIGINT) AS canonical_doc_id
-        FROM corpus GROUP BY md5(text) HAVING count(*) > 1
-    """,
-    "minhash_signature": f"""
-        WITH msh AS (
-          SELECT DISTINCT doc_id, substring(text, i, 5) AS shingle
-          FROM documents
-          LATERAL VIEW explode(
-            sequence(1, greatest(length(text) - 4, 1))) g AS i
-        ),
-        mh32 AS (
-          SELECT doc_id, ({_H60.format("shingle")} & 4294967295) AS h32
-          FROM msh
-        ),
-        mperm AS (SELECT * FROM VALUES {_PERMS} AS t(perm, a, b))
-        SELECT doc_id, CAST(p.perm AS INT) AS perm,
-               CAST(min((p.a * h32 + p.b) % {MINHASH_PRIME}) AS BIGINT)
-                 AS minhash
-        FROM mh32 CROSS JOIN mperm p GROUP BY doc_id, p.perm
-    """,
-    "lsh_candidate_pairs": f"""
-        WITH msh AS (
-          SELECT DISTINCT doc_id, substring(text, i, 5) AS shingle
-          FROM documents
-          LATERAL VIEW explode(
-            sequence(1, greatest(length(text) - 4, 1))) g AS i
-        ),
-        mh32 AS (
-          SELECT doc_id, ({_H60.format("shingle")} & 4294967295) AS h32
-          FROM msh
-        ),
-        mperm AS (SELECT * FROM VALUES {_PERMS} AS t(perm, a, b)),
-        sig AS (
-          SELECT doc_id, p.perm,
-                 CAST(min((p.a * h32 + p.b) % {MINHASH_PRIME}) AS BIGINT)
-                   AS minhash
-          FROM mh32 CROSS JOIN mperm p GROUP BY doc_id, p.perm
-        ),
-        banded AS (
-          SELECT doc_id, CAST(perm DIV 3 AS INT) AS band,
-                 md5(listagg(CAST(minhash AS STRING), ',')
-                     WITHIN GROUP (ORDER BY perm)) AS band_hash
-          FROM sig GROUP BY doc_id, CAST(perm DIV 3 AS INT)
-        )
-        SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-        FROM banded a JOIN banded b
-          ON a.band = b.band AND a.band_hash = b.band_hash
-         AND a.doc_id < b.doc_id
-    """,
-    "doc_fingerprint": f"""
-        WITH toks AS (
-          SELECT DISTINCT doc_id, tok
-          FROM (SELECT doc_id,
-                       explode(regexp_extract_all(text, '[\\\\S]+', 0)) AS tok
-                FROM documents)
-        )
-        SELECT doc_id,
-               CAST(bit_xor({_H60.format("tok")}) AS BIGINT) AS fingerprint,
-               CAST(count(*) AS BIGINT) AS n_distinct_tokens
-        FROM toks GROUP BY doc_id
-    """,
-    # ---- textstats family -----------------------------------------------
-    "sentence_stats": """
-        SELECT doc_id,
-               CAST(size(regexp_extract_all(text, '[.!?。！？]', 0))
-                 AS BIGINT) AS n_sent_marks,
-               CAST(size(regexp_extract_all(text, '[\\\\S]+', 0))
-                 AS BIGINT) AS n_tokens
-        FROM documents
-    """,
-    "lang_id_heuristic": """
-        SELECT doc_id,
-               (length(text) - length(regexp_replace(text, '[一-鿿]', '')))
-                 * 1.0d / greatest(length(text), 1) AS cjk_ratio,
-               (length(text) - length(regexp_replace(text, '[A-Za-z]', '')))
-                 * 1.0d / greatest(length(text), 1) AS latin_ratio,
-               CASE WHEN length(text) = 0 THEN 'other'
-                    WHEN (length(text)
-                          - length(regexp_replace(text, '[一-鿿]', '')))
-                         * 1.0d / length(text) > 0.3 THEN 'zh'
-                    WHEN (length(text)
-                          - length(regexp_replace(text, '[A-Za-z]', '')))
-                         * 1.0d / length(text) > 0.3 THEN 'en'
-                    ELSE 'other' END AS pred_lang
-        FROM documents
-    """,
-    "token_counts": """
-        SELECT doc_id,
-               CAST(size(regexp_extract_all(text, '[\\\\S]+', 0)) AS INT)
-                 AS ws_tokens,
-               CAST(size(regexp_extract_all(text,
-                    ' ?[A-Za-z]+| ?[0-9]+|[一-鿿]| ?[^\\\\sA-Za-z0-9一-鿿]+',
-                    0)) AS INT) AS bpe_tokens,
-               CAST(ceil(length(text) / 4.0) AS BIGINT) AS subword_est,
-               CAST(length(text) AS INT) AS n_chars_computed
-        FROM documents
-    """,
-    "quality_features": """
-        SELECT doc_id,
-               (length(text) - length(regexp_replace(
-                  text, '[\\\\.,;:!\\\\?。！？，；：]', '')))
-                 * 1.0d / greatest(length(text), 1) AS punct_ratio,
-               CAST(CASE WHEN length(text) BETWEEN 50 AND 2000
-                         THEN 0.4 ELSE 0.0 END
-               + CASE WHEN (length(text) - length(regexp_replace(
-                              text, '[\\\\.,;:!\\\\?。！？，；：]', '')))
-                           * 1.0d / greatest(length(text), 1) > 0.005
-                       AND (length(text) - length(regexp_replace(
-                              text, '[\\\\.,;:!\\\\?。！？，；：]', '')))
-                           * 1.0d / greatest(length(text), 1) < 0.2
-                      THEN 0.3 ELSE 0.0 END AS DOUBLE) AS partial_quality
-        FROM documents
-    """,
-    "url_canonicalize": """
-        WITH raw AS (
-          SELECT doc_id,
-                 'HTTPS://WWW.' || source || '.Example.COM/Path/'
-                   || CAST(doc_id AS STRING)
-                   || CASE WHEN doc_id % 3 = 0
-                           THEN '/?utm_source=feed&utm_campaign=x&id='
-                           ELSE '?id=' END
-                   || CAST(doc_id AS STRING)
-                   || CASE WHEN doc_id % 4 = 0 THEN '#frag' ELSE '' END
-                   AS url
-          FROM documents
-        ),
-        s1 AS (
-          SELECT doc_id, url, regexp_replace(url, '#.*$', '') AS u
-          FROM raw
-        ),
-        parts AS (
-          SELECT doc_id, url,
-                 lower(regexp_extract(u, '^([A-Za-z][A-Za-z0-9+.-]*)://', 1))
-                   AS scheme,
-                 regexp_replace(
-                   lower(regexp_extract(
-                     u, '^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]+)', 1)),
-                   '^www\\\\.', '') AS host,
-                 regexp_extract(
-                   u, '^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]+(.*)$', 1) AS rest
-          FROM s1
-        )
-        SELECT doc_id, url,
-               scheme || '://' || host ||
-               regexp_replace(
-                 regexp_replace(
-                   regexp_replace(
-                     regexp_replace(
-                       rest, '(utm_[A-Za-z]+|fbclid|gclid|ref)=[^&]*&?', ''),
-                     '[?&]+$', ''),
-                   '/+\\\\?', '?'),
-                 '/+$', '') AS canonical_url
-        FROM parts
-    """,
-    "pii_redaction": """
-        WITH seeded AS (
-          SELECT doc_id,
-                 text
-                   || CASE WHEN doc_id % 5 = 0
-                           THEN ' contact user' || CAST(doc_id % 100 AS STRING)
-                                || '@mail.example.com'
-                           ELSE '' END
-                   || CASE WHEN doc_id % 7 = 0
-                           THEN ' call +1 555 01'
-                                || CAST(doc_id % 90 + 10 AS STRING)
-                           ELSE '' END
-                   AS text
-          FROM documents
-        ),
-        no_email AS (
-          SELECT doc_id,
-                 CAST(size(regexp_extract_all(
-                   text, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\\\.[A-Za-z]{2,}',
-                   0)) AS INT) AS n_emails,
-                 regexp_replace(
-                   text, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\\\.[A-Za-z]{2,}',
-                   '<EMAIL>') AS t
-          FROM seeded
-        )
-        SELECT doc_id, n_emails,
-               CAST(size(regexp_extract_all(
-                 t, '\\\\+?[0-9][0-9 -]{6,}[0-9]', 0)) AS INT) AS n_phones,
-               regexp_replace(t, '\\\\+?[0-9][0-9 -]{6,}[0-9]', '<PHONE>')
-                 AS text_redacted
-        FROM no_email
-    """,
-    "repetition_stats": """
-        WITH toks AS (
-          SELECT doc_id,
-                 explode(regexp_extract_all(lower(text), '[a-z0-9]+', 0))
-                   AS tok
-          FROM documents
-        ),
-        tf AS (SELECT doc_id, tok, count(*) AS tf
-               FROM toks GROUP BY doc_id, tok),
-        agg AS (
-          SELECT doc_id, CAST(sum(tf) AS BIGINT) AS n_tokens,
-                 CAST(count(*) AS BIGINT) AS n_distinct
-          FROM tf GROUP BY doc_id
-        ),
-        top AS (
-          SELECT doc_id, tok AS top_token, tf,
-                 row_number() OVER (PARTITION BY doc_id
-                                    ORDER BY tf DESC, tok) AS rn
-          FROM tf
-        )
-        SELECT a.doc_id, a.n_tokens, a.n_distinct,
-               1.0d - a.n_distinct * 1.0d / a.n_tokens AS dup_token_ratio,
-               t.top_token, t.tf * 1.0d / a.n_tokens AS top_token_frac
-        FROM agg a JOIN top t ON a.doc_id = t.doc_id AND t.rn = 1
-    """,
-    "unigram_logprob": """
-        WITH toks AS (
-          SELECT doc_id,
-                 explode(regexp_extract_all(lower(text), '[a-z0-9]+', 0))
-                   AS tok
-          FROM documents
-        ),
-        freq AS (SELECT tok, count(*) AS tf FROM toks GROUP BY tok),
-        tot AS (SELECT sum(tf) AS n FROM freq)
-        SELECT t.doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
-               avg(ln(f.tf)) - ln((SELECT n FROM tot)) AS avg_logprob
-        FROM toks t JOIN freq f ON t.tok = f.tok
-        GROUP BY t.doc_id
-    """,
-    # ---- temporal family -------------------------------------------------
-    "sessionize_events": f"""
-        WITH lagd AS (
-          SELECT event_id, user_id, ts,
-                 CAST(floor({_EPOCH.format("ts")}) AS BIGINT) AS ts_sec,
-                 CAST(CASE WHEN lag({_EPOCH.format("ts")}) OVER w IS NULL
-                             OR {_EPOCH.format("ts")}
-                                - lag({_EPOCH.format("ts")}) OVER w > 1800
-                           THEN 1 ELSE 0 END AS INT) AS session_start
-          FROM events
-          WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-        )
-        SELECT event_id, user_id, ts_sec, session_start,
-               CAST(sum(session_start)
-                    OVER (PARTITION BY user_id ORDER BY ts, event_id
-                          ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_id
-        FROM lagd
-    """,
+# ---------------------------------------------------------------------
+# DuckDB -> Spark dialect rewriter
+# ---------------------------------------------------------------------
+
+# While rewriting, every string literal is masked as \x00<n>\x00 (n
+# indexes the decoded values) so no rule can touch its contents.
+_LITERAL = re.compile(r"'(?:[^']|'')*'")
+_MASK = re.compile(r"\x00(\d+)\x00")
+
+_RENAMES = {
+    "len": "size",
+    "unnest": "explode",
+    "generate_series": "sequence",
+    "quantile_cont": "percentile",
+    "array_to_string": "array_join",
+    "list_sort": "array_sort",
+    "list_distinct": "array_distinct",
+    "string_split_regex": "split",
+}
+_RENAME = re.compile(rf"\b({'|'.join(_RENAMES)})(?=\s*\()", re.I)
+_DECIMAL = re.compile(r"(?<![\w.])(\d+\.\d+)(?![\w.])")
+_INDEX = re.compile(r"\b[A-Za-z_][\w.]*(?=\s*\[)")
+_HEX_PREFIX = re.compile(r"\(\s*\x00(\d+)\x00\s*\|\|")
+_BIGINT_CAST = re.compile(r"\s*::\s*bigint\b", re.I)
+_ORDER_BY = re.compile(r"\s+ORDER\s+BY\s+", re.I)
+
+
+def _spark_literal(value: str) -> str:
+    """Spark SQL single-quoted string literal (backslash-escaping)."""
+    return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def _java_regex_quote(value: str) -> str:
+    """Regex matching ``value`` literally (Java syntax)."""
+    return re.sub(r"([\\^$.|?*+()\[\]{}])", r"\\\1", value)
+
+
+def _close(sql: str, i: int) -> int:
+    """Index of the bracket closing the one at ``sql[i]``."""
+    depth = 0
+    for j in range(i, len(sql)):
+        if sql[j] in "([":
+            depth += 1
+        elif sql[j] in ")]":
+            depth -= 1
+            if depth == 0:
+                return j
+    raise ValueError(f"unbalanced bracket at {i}: {sql[i:i + 60]!r}")
+
+
+def _split_args(body: str) -> list[str]:
+    """Top-level comma split of an argument list's body."""
+    args, depth, start = [], 0, 0
+    for j, c in enumerate(body):
+        if c in "([":
+            depth += 1
+        elif c in ")]":
+            depth -= 1
+        elif c == "," and depth == 0:
+            args.append(body[start:j])
+            start = j + 1
+    args.append(body[start:])
+    return [a.strip() for a in args]
+
+
+def _rewrite_calls(sql: str, name: str, render) -> str:
+    """Replace every ``name(args)`` with ``render(args)``; arguments are
+    rewritten first, so nested calls of ``name`` are handled too."""
+    call = re.compile(rf"\b{name}\s*\(", re.I)
+    out, pos = [], 0
+    while m := call.search(sql, pos):
+        close = _close(sql, m.end() - 1)
+        body = _rewrite_calls(sql[m.end():close], name, render)
+        out += [sql[pos:m.start()], render(_split_args(body))]
+        pos = close + 1
+    return "".join(out) + sql[pos:]
+
+
+class _Dialect:
+    """One rewrite of masked DuckDB text; ``lits`` are the literals."""
+
+    def __init__(self, lits: list[str]):
+        self.lits = lits
+
+    def lit(self, arg: str) -> str | None:
+        m = _MASK.fullmatch(arg)
+        return self.lits[int(m.group(1))] if m else None
+
+    def mask(self, value: str) -> str:
+        self.lits.append(value)
+        return f"\x00{len(self.lits) - 1}\x00"
+
+    def regexp_replace(self, args):
+        if len(args) != 4 or self.lit(args[3]) != "g":
+            raise ValueError(
+                f"regexp_replace{tuple(args)}: only the global 'g' form "
+                "has a Spark equivalent"
+            )
+        return f"regexp_replace({', '.join(args[:3])})"
+
+    def regexp_extract_all(self, args):
+        if len(args) == 2:
+            args = [*args, "0"]
+        return f"regexp_extract_all({', '.join(args)})"
+
+    def string_split(self, args):
+        sep = self.lit(args[1])
+        if sep is None:
+            raise ValueError(f"string_split{tuple(args)}: separator not literal")
+        return f"split({args[0]}, {self.mask(_java_regex_quote(sep))})"
+
+    def string_agg(self, args):
+        *head, last = args
+        value, *order = _ORDER_BY.split(last, maxsplit=1)
+        agg = f"listagg({', '.join(head + [value])})"
+        return agg + (f" WITHIN GROUP (ORDER BY {order[0]})" if order else "")
+
+    def epoch(self, args):
+        return f"CAST(CAST({args[0]} AS TIMESTAMP) AS DOUBLE)"
+
+    def h60(self, sql: str) -> str:
+        """``('0x' || X)::bigint`` -> ``CAST(conv(X, 16, 10) AS BIGINT)``."""
+        out, pos = [], 0
+        for m in _HEX_PREFIX.finditer(sql):
+            if m.start() < pos or self.lits[int(m.group(1))] != "0x":
+                continue
+            close = _close(sql, m.start())
+            cast = _BIGINT_CAST.match(sql, close + 1)
+            if not cast:
+                raise ValueError(
+                    f"'0x' prefix without ::bigint: {sql[m.start():close + 1]!r}"
+                )
+            hex_digits = sql[m.end():close].strip()
+            out += [sql[pos:m.start()],
+                    f"CAST(conv({hex_digits}, 16, 10) AS BIGINT)"]
+            pos = cast.end()
+        return "".join(out) + sql[pos:]
+
+    def index(self, sql: str) -> str:
+        """1-based ``a[i]`` -> ``element_at(a, CAST(i AS INT))``."""
+        out, pos = [], 0
+        while m := _INDEX.search(sql, pos):
+            open_ = sql.index("[", m.end())
+            close = _close(sql, open_)
+            inner = self.index(sql[open_ + 1:close])
+            out += [sql[pos:m.start()],
+                    f"element_at({m.group(0)}, CAST({inner} AS INT))"]
+            pos = close + 1
+        return "".join(out) + sql[pos:]
+
+
+def spark_dialect(duckdb_sql: str) -> str:
+    """Rewrite DuckDB oracle SQL into the equivalent Spark SQL (the rules
+    are listed in the module docstring)."""
+    d = _Dialect([])
+    sql = _LITERAL.sub(
+        lambda m: d.mask(m.group(0)[1:-1].replace("''", "'")), duckdb_sql
+    )
+    if "'" in sql:
+        raise ValueError("unterminated string literal")
+    sql = d.h60(sql)
+    for name, render in (
+        ("regexp_replace", d.regexp_replace),
+        ("regexp_extract_all", d.regexp_extract_all),
+        ("string_split", d.string_split),
+        ("string_agg", d.string_agg),
+        ("epoch", d.epoch),
+    ):
+        sql = _rewrite_calls(sql, name, render)
+    sql = d.index(sql)
+    sql = _RENAME.sub(lambda m: _RENAMES[m.group(1).lower()], sql)
+    sql = re.sub(r"\bVARCHAR\b", "STRING", sql, flags=re.I)
+    sql = sql.replace("//", " DIV ")
+    sql = _DECIMAL.sub(r"\1d", sql)
+    return _MASK.sub(lambda m: _spark_literal(d.lits[int(m.group(1))]), sql)
+
+
+# ---------------------------------------------------------------------
+# the six queries whose oracle text cannot be rewritten
+# ---------------------------------------------------------------------
+
+_EPOCH = "CAST(CAST({0} AS TIMESTAMP) AS DOUBLE)"
+
+SPARK_SQL = {
     "asof_join_events": f"""
         WITH r AS (
           SELECT user_id, ts, max(value) AS state
@@ -556,607 +310,49 @@ SQL_QUERIES = {
                mr.state AS state
         FROM m WHERE tag = 1
     """,
-    # ---- extraction-pipeline relational stages -------------------------
-    "chunk_explode_offsets": """
-        SELECT doc_id, CAST(i AS BIGINT) AS chunk_idx,
-               substring(text, CAST(i * 100 + 1 AS INT), 100) AS chunk_text,
-               CAST(i * 100 AS BIGINT) AS chunk_off
-        FROM documents
-        LATERAL VIEW explode(sequence(0,
-          CAST(CASE WHEN length(text) <= 100 THEN 0
-               ELSE ceil(length(text) / 100.0d) - 1 END AS BIGINT))) g AS i
-    """,
-    "chunk_merge_roundtrip": """
-        WITH chunks AS (
-          SELECT doc_id, text, CAST(i AS BIGINT) AS idx,
-                 substring(text, CAST(i * 120 + 1 AS INT), 120) AS chunk
-          FROM documents
-          LATERAL VIEW explode(sequence(0,
-            CAST(CASE WHEN length(text) <= 120 THEN 0
-                 ELSE ceil(length(text) / 120.0d) - 1 END AS BIGINT))) g AS i
-        )
-        SELECT doc_id,
-               (listagg(chunk, '') WITHIN GROUP (ORDER BY idx)
-                 = min(text)) AS roundtrip_ok,
-               CAST(count(*) AS BIGINT) AS n_chunks
-        FROM chunks GROUP BY doc_id
-    """,
-    "dbc2sbc_normalize": f"""
-        SELECT doc_id,
-               translate(substring(text, 1, 40) || '：ＡＢ！１２３',
-                         {_lit(DBC_FROM)}, {_lit(DBC_TO)}) AS normalized
-        FROM documents
-    """,
-    "seeded_negative_sample": f"""
-        WITH universe AS (
-          SELECT c.c_custkey, p.o_orderpriority
-          FROM customer c
-          CROSS JOIN (SELECT DISTINCT o_orderpriority FROM orders) p
-        ), positives AS (
-          SELECT DISTINCT o_custkey AS c_custkey, o_orderpriority
-          FROM orders
-        ), anti AS (
-          SELECT u.c_custkey, u.o_orderpriority
-          FROM universe u LEFT ANTI JOIN positives p
-            ON u.c_custkey = p.c_custkey
-           AND u.o_orderpriority = p.o_orderpriority
-        ), negs AS (
-          SELECT c_custkey, o_orderpriority,
-                 row_number() OVER (
-                   PARTITION BY c_custkey
-                   ORDER BY {_H60.format(
-                       "CAST(c_custkey AS STRING) || '|' || o_orderpriority"
-                   )}
-                 ) AS rn
-          FROM anti
-        )
-        SELECT c_custkey, o_orderpriority FROM negs WHERE rn <= 2
-    """,
-    "relation_class_report": """
-        WITH tri AS (
-          SELECT translate(p_type, ' ', '的') || '的' || r_name AS pred,
-                 p_name AS subj_text,
-                 (p_partkey % 97) / 97.0d AS obj_prob
-          FROM part CROSS JOIN region WHERE p_size > 45
-          UNION ALL
-          SELECT p_brand AS pred, p_name AS subj_text,
-                 (p_partkey % 89) / 89.0d AS obj_prob
-          FROM part WHERE p_size > 45
-        )
-        SELECT coalesce(nullif(regexp_extract(pred, '的([^的]+)$', 1), ''),
-                        pred) AS relation_class,
-               CAST(count(*) AS BIGINT) AS n_triples,
-               CAST(count(DISTINCT subj_text) AS BIGINT) AS n_subjects,
-               CAST(avg(obj_prob) AS DOUBLE) AS mean_obj_prob
-        FROM tri GROUP BY 1
-    """,
-    # ---- dedup family (continued) --------------------------------------
-    "ngram_jaccard_pairs": """
-        WITH docs AS (
-          SELECT doc_id, text FROM documents WHERE doc_id < 120
-          UNION ALL
-          SELECT doc_id + 100000 AS doc_id, text || ' mirrored with tail'
-            AS text
-          FROM documents WHERE doc_id < 40
+    "benchmark_decontaminate": r"""
+        WITH tok AS (
+          SELECT doc_id, split(trim(lower(text)), '\\s+') AS t
+          FROM documents WHERE text IS NOT NULL
         ),
-        sh AS (
-          SELECT DISTINCT doc_id, substring(text, i, 5) AS shingle
-          FROM docs
+        dg AS (
+          SELECT DISTINCT doc_id, array_join(slice(t, i, 5), ' ') AS ngram
+          FROM tok
           LATERAL VIEW explode(
-            sequence(1, greatest(length(text) - 4, 1))) g AS i
+            CASE WHEN size(t) >= 5 THEN sequence(1, size(t) - 4)
+                 ELSE CAST(array() AS ARRAY<INT>) END) g AS i
         ),
-        sizes AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY doc_id),
-        inter AS (
-          SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS inter
-          FROM sh a JOIN sh b
-            ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-          GROUP BY a.doc_id, b.doc_id
-        )
-        SELECT doc_a, doc_b, CAST(inter AS BIGINT) AS inter,
-               CAST(sa.sz AS BIGINT) AS sz_a, CAST(sb.sz AS BIGINT) AS sz_b,
-               inter * 1.0d / (sa.sz + sb.sz - inter) AS jaccard
-        FROM inter JOIN sizes sa ON inter.doc_a = sa.doc_id
-                   JOIN sizes sb ON inter.doc_b = sb.doc_id
-        WHERE inter * 1.0d / (sa.sz + sb.sz - inter) >= 0.5d
+        eg AS (SELECT DISTINCT ngram FROM dg WHERE doc_id % 97 = 0)
+        SELECT dg.doc_id, CAST(count(*) AS BIGINT) AS n_contaminated_ngrams
+        FROM dg JOIN eg ON dg.ngram = eg.ngram
+        GROUP BY dg.doc_id
     """,
-    "simhash_fingerprint": f"""
-        WITH docs AS (SELECT * FROM documents WHERE doc_id < 120),
-        tf AS (
-          SELECT doc_id, tok, count(*) AS tf
-          FROM (SELECT doc_id,
-                       explode(regexp_extract_all(text, '[\\\\S]+', 0)) AS tok
-                FROM docs)
-          GROUP BY doc_id, tok
-        ),
-        bits AS (
-          SELECT doc_id, bit,
-                 sum(tf * (CASE WHEN (shiftright({_H60.format("tok")},
-                                        CAST(bit AS INT)) & 1) = 1
-                           THEN 1 ELSE -1 END)) AS s
-          FROM tf LATERAL VIEW explode(sequence(0, 59)) g AS bit
-          GROUP BY doc_id, bit
-        )
-        SELECT doc_id,
-               CAST(sum(CASE WHEN s > 0
-                        THEN shiftleft(CAST(1 AS BIGINT), CAST(bit AS INT))
-                        ELSE CAST(0 AS BIGINT) END) AS BIGINT) AS simhash
-        FROM bits GROUP BY doc_id
-    """,
-    "cdc_segments": f"""
-        WITH {_CDC_SEG.format(src="documents")}
-        SELECT doc_id, seg_idx, seg_start, seg_len, seg_hash FROM segs
-    """,
-    "cdc_shared_boilerplate": f"""
-        WITH seeded AS (
-          SELECT doc_id,
-                 text || CASE WHEN doc_id % 4 = 0
-                              THEN ' {_CDC_FOOTER}' ELSE '' END AS text
-          FROM documents
-        ),
-        {_CDC_SEG.format(src="seeded")}
-        SELECT seg_hash,
-               CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs,
-               CAST(count(*) AS BIGINT) AS n_occurrences,
-               CAST(min(seg_len) AS INT) AS seg_len
-        FROM segs WHERE seg_len >= 20
-        GROUP BY seg_hash HAVING count(DISTINCT doc_id) > 1
-    """,
-    # ---- textstats family (continued) ----------------------------------
-    "corpus_filter_pipeline": """
-        WITH feats AS (
-          SELECT doc_id,
-                 CASE WHEN length(text) = 0 THEN 'other'
-                      WHEN (length(text)
-                            - length(regexp_replace(text, '[一-鿿]', '')))
-                           * 1.0d / length(text) > 0.3d THEN 'zh'
-                      WHEN (length(text)
-                            - length(regexp_replace(text, '[A-Za-z]', '')))
-                           * 1.0d / length(text) > 0.3d THEN 'en'
-                      ELSE 'other' END AS pred_lang,
-                 CAST(size(regexp_extract_all(text, '[\\\\S]+', 0)) AS INT)
-                   AS ws_tokens,
-                 CAST(size(regexp_extract_all(text,
-                      ' ?[A-Za-z]+| ?[0-9]+|[一-鿿]| ?[^\\\\sA-Za-z0-9一-鿿]+',
-                      0)) AS INT) AS bpe_tokens,
-                 (length(text) - length(regexp_replace(text,
-                    '[\\\\.,;:!\\\\?。！？，；：]', '')))
-                   * 1.0d / greatest(length(text), 1) AS punct_ratio,
-                 md5(text) AS content_hash
-          FROM documents
-        ),
-        canon AS (
-          SELECT md5(text) AS content_hash, min(doc_id) AS canonical_doc_id
-          FROM documents GROUP BY md5(text) HAVING count(*) > 1
-        )
-        SELECT f.doc_id, f.pred_lang, f.ws_tokens, f.bpe_tokens,
-               f.punct_ratio,
-               (c.canonical_doc_id IS NOT NULL
-                AND f.doc_id <> c.canonical_doc_id) AS is_dup,
-               (f.pred_lang IN ('zh', 'en') AND f.ws_tokens >= 2
-                AND f.bpe_tokens >= 4
-                AND f.punct_ratio < 0.2d
-                AND NOT (c.canonical_doc_id IS NOT NULL
-                         AND f.doc_id <> c.canonical_doc_id)) AS keep
-        FROM feats f LEFT JOIN canon c ON f.content_hash = c.content_hash
-    """,
-    "canonicalize_surface_forms": """
+    "canonicalize_surface_forms": r"""
         WITH toks AS (
           SELECT doc_id,
                  regexp_replace(lower(trim(tok)), '[^a-z0-9一-鿿]', '')
                    AS surface
           FROM (SELECT doc_id,
-                       explode(regexp_extract_all(text, '[\\\\S]+', 0)) AS tok
+                       explode(regexp_extract_all(text, '[\\S]+', 0)) AS tok
                 FROM documents)
         )
         SELECT surface, CAST(min(doc_id) AS BIGINT) AS canonical_id,
                CAST(count(*) AS BIGINT) AS n_mentions
         FROM toks WHERE surface <> '' GROUP BY surface
     """,
-    # ---- KG family ------------------------------------------------------
-    "kg_entity_edges": """
-        WITH tri AS (
-          SELECT p_name AS subj_text, 'made-in' AS pred,
-                 r_name AS obj_text,
-                 (p_partkey % 83) / 83.0d AS obj_prob,
-                 CAST(p_partkey % 50 AS BIGINT) AS doc_id
-          FROM part JOIN region ON r_regionkey = p_partkey % 5
-          WHERE p_size > 47
-          UNION ALL
-          SELECT upper(p_name), 'made-in', lower(r_name),
-                 (p_partkey % 83) / 83.0d,
-                 CAST(p_partkey % 37 AS BIGINT)
-          FROM part JOIN region ON r_regionkey = p_partkey % 5
-          WHERE p_size > 47
-        ),
-        surf AS (
-          SELECT subj_text AS surface FROM tri
-          UNION SELECT obj_text FROM tri
-        ),
-        canon AS (
-          SELECT surface, lower(trim(surface)) AS canonical_id FROM surf
-        )
-        SELECT s.canonical_id AS subj_id, t.pred, o.canonical_id AS obj_id,
-               CAST(count(*) AS BIGINT) AS n_mentions,
-               CAST(count(DISTINCT t.doc_id) AS BIGINT) AS n_docs,
-               CAST(avg(t.obj_prob) AS DOUBLE) AS mean_obj_prob
-        FROM tri t JOIN canon s ON t.subj_text = s.surface
-                   JOIN canon o ON t.obj_text = o.surface
-        GROUP BY s.canonical_id, t.pred, o.canonical_id
-    """,
-    # ---- similarity / ANN family ---------------------------------------
-    "embedding_near_dup": f"""
-        WITH emb_dup AS (
-          SELECT vec_id, embedding FROM embeddings
-          UNION ALL
-          SELECT vec_id + 100000 AS vec_id, embedding
-          FROM embeddings WHERE vec_id < 10
-        ),
-        flat AS (
-          SELECT vec_id, i, CAST(x AS DECIMAL(9,6)) AS xd
-          FROM emb_dup LATERAL VIEW posexplode(embedding) g AS i, x
-        ),
-        norms AS (
-          SELECT vec_id, sum(xd * xd) AS norm2 FROM flat GROUP BY vec_id
-        ),
-        dots AS (
-          SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-                 sum(a.xd * b.xd) AS dot
-          FROM flat a JOIN flat b
-            ON a.i = b.i AND a.vec_id < b.vec_id
-          GROUP BY a.vec_id, b.vec_id
-        )
-        SELECT vec_a, vec_b
-        FROM dots JOIN norms na ON dots.vec_a = na.vec_id
-                  JOIN norms nb ON dots.vec_b = nb.vec_id
-        WHERE CAST(dot AS DOUBLE)
-              / sqrt(CAST(na.norm2 AS DOUBLE) * CAST(nb.norm2 AS DOUBLE))
-              >= 0.9d
-    """,
-    "ann_topk_dot": f"""
-        WITH flat AS ({_EMB_DEC}),
-        q AS (
-          SELECT vec_id AS query_id, i, xd AS qx FROM flat WHERE vec_id < 5
-        ),
-        dots AS (
-          SELECT q.query_id, f.vec_id AS neighbor_id,
-                 CAST(sum(q.qx * f.xd) AS DOUBLE) AS dot
-          FROM q JOIN flat f ON q.i = f.i
-          WHERE f.vec_id <> q.query_id
-          GROUP BY q.query_id, f.vec_id
-        )
-        SELECT query_id, neighbor_id, CAST(rnk AS INT) AS rank
-        FROM (SELECT query_id, neighbor_id,
-                     row_number() OVER (PARTITION BY query_id
-                                        ORDER BY dot DESC, neighbor_id)
-                       AS rnk
-              FROM dots)
-        WHERE rnk <= 3
-    """,
-    "ann_srp_topk": f"""
-        WITH flat AS ({_EMB_MICRO}),
-        signs AS (
-          SELECT plane, i, {_SRP_SIGN} AS sign
-          FROM (SELECT explode(sequence(0, {_SRP_PLANES - 1})) AS plane)
-          CROSS JOIN (SELECT explode(sequence(0, 63)) AS i)
-        ),
-        proj AS (
-          SELECT f.vec_id, s.plane, sum(f.xi * s.sign) AS proj
-          FROM flat f JOIN signs s ON f.i = s.i
-          GROUP BY f.vec_id, s.plane
-        ),
-        buckets AS (
-          SELECT vec_id,
-                 CAST(sum(CASE WHEN proj > 0
-                          THEN shiftleft(CAST(1 AS BIGINT),
-                                         CAST(plane AS INT))
-                          ELSE CAST(0 AS BIGINT) END) AS BIGINT) AS bucket
-          FROM proj GROUP BY vec_id
-        ),
-        cand AS (
-          SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id
-          FROM buckets q
-          JOIN buckets c ON q.bucket = c.bucket AND c.vec_id <> q.vec_id
-          WHERE q.vec_id < 5
-        ),
-        dots AS (
-          SELECT cand.query_id, cand.neighbor_id,
-                 CAST(sum(qf.xi * cf.xi) AS DOUBLE) / 1e12 AS dot
-          FROM cand
-          JOIN flat qf ON qf.vec_id = cand.query_id
-          JOIN flat cf ON cf.vec_id = cand.neighbor_id AND cf.i = qf.i
-          GROUP BY cand.query_id, cand.neighbor_id
-        )
-        SELECT query_id, neighbor_id, dot, CAST(rnk AS INT) AS rank
-        FROM (SELECT query_id, neighbor_id, dot,
-                     row_number() OVER (PARTITION BY query_id
-                                        ORDER BY dot DESC, neighbor_id)
-                       AS rnk
-              FROM dots)
-        WHERE rnk <= 3
-    """,
-    "ann_ivf_topk": f"""
-        WITH flat AS ({_EMB_MICRO}),
-        cflat AS (
-          SELECT vec_id AS cent_id, i, xi AS ci
-          FROM flat WHERE vec_id < {_IVF_C}
-        ),
-        cdots AS (
-          SELECT f.vec_id, c.cent_id, sum(f.xi * c.ci) AS cdot
-          FROM flat f JOIN cflat c ON f.i = c.i
-          GROUP BY f.vec_id, c.cent_id
-        ),
-        ranked AS (
-          SELECT vec_id, cent_id,
-                 row_number() OVER (PARTITION BY vec_id
-                                    ORDER BY cdot DESC, cent_id) AS crank
-          FROM cdots
-        ),
-        assign AS (SELECT vec_id, cent_id FROM ranked WHERE crank = 1),
-        probes AS (
-          SELECT vec_id AS query_id, cent_id
-          FROM ranked WHERE crank <= {_IVF_PROBE} AND vec_id < 5
-        ),
-        cand AS (
-          SELECT DISTINCT p.query_id, a.vec_id AS neighbor_id
-          FROM probes p JOIN assign a ON p.cent_id = a.cent_id
-          WHERE a.vec_id <> p.query_id
-        ),
-        dots AS (
-          SELECT cand.query_id, cand.neighbor_id,
-                 CAST(sum(qf.xi * nf.xi) AS DOUBLE) / 1e12 AS dot
-          FROM cand
-          JOIN flat qf ON qf.vec_id = cand.query_id
-          JOIN flat nf ON nf.vec_id = cand.neighbor_id AND nf.i = qf.i
-          GROUP BY cand.query_id, cand.neighbor_id
-        )
-        SELECT query_id, neighbor_id, dot, CAST(rnk AS INT) AS rank
-        FROM (SELECT query_id, neighbor_id, dot,
-                     row_number() OVER (PARTITION BY query_id
-                                        ORDER BY dot DESC, neighbor_id)
-                       AS rnk
-              FROM dots)
-        WHERE rnk <= 3
-    """,
-    # ---- corpus profiling / sharding / range join ----------------------
-    "range_join_events": """
-        WITH wins AS (
-          SELECT event_id AS win_id, user_id, ts AS w_start,
-                 ts + INTERVAL 30 MINUTE AS w_end
-          FROM events WHERE event_type = 'purchase'
-        )
-        SELECT w.win_id, w.user_id,
-               CAST(count(*) AS BIGINT) AS n_events,
-               CAST(sum(e.value) AS DOUBLE) AS sum_value
-        FROM wins w JOIN events e
-          ON e.user_id = w.user_id
-         AND e.ts >= w.w_start AND e.ts < w.w_end
-        GROUP BY w.win_id, w.user_id
-    """,
-    "kg_entity_degrees": """
-        WITH tri AS (
-          SELECT p_name AS subj_text, 'made-in' AS pred,
-                 r_name AS obj_text,
-                 CAST(p_partkey % 50 AS BIGINT) AS doc_id
-          FROM part JOIN region ON r_regionkey = p_partkey % 5
-          WHERE p_size > 47
-          UNION ALL
-          SELECT upper(p_name), 'made-in', lower(r_name),
-                 CAST(p_partkey % 37 AS BIGINT)
-          FROM part JOIN region ON r_regionkey = p_partkey % 5
-          WHERE p_size > 47
-        ),
-        surf AS (
-          SELECT subj_text AS surface FROM tri
-          UNION SELECT obj_text FROM tri
-        ),
-        canon AS (
-          SELECT surface, lower(trim(surface)) AS canonical_id FROM surf
-        ),
-        edges AS (
-          SELECT s.canonical_id AS subj_id, t.pred, o.canonical_id AS obj_id,
-                 count(*) AS n_mentions
-          FROM tri t JOIN canon s ON t.subj_text = s.surface
-                     JOIN canon o ON t.obj_text = o.surface
-          GROUP BY s.canonical_id, t.pred, o.canonical_id
-        ),
-        dirs AS (
-          SELECT subj_id AS entity_id, obj_id AS nbr, pred, n_mentions,
-                 'out' AS dir
-          FROM edges
-          UNION ALL
-          SELECT obj_id, subj_id, pred, n_mentions, 'in' FROM edges
-        )
-        SELECT entity_id,
-               CAST(count(DISTINCT CASE WHEN dir = 'out' THEN nbr END)
-                 AS BIGINT) AS out_degree,
-               CAST(count(DISTINCT CASE WHEN dir = 'in' THEN nbr END)
-                 AS BIGINT) AS in_degree,
-               CAST(count(DISTINCT pred) AS BIGINT) AS n_preds,
-               CAST(sum(n_mentions) AS BIGINT) AS strength
-        FROM dirs GROUP BY entity_id
-    """,
-    "domain_skew_report": """
-        WITH per AS (
-          SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-                 CAST(sum(n_chars) AS BIGINT) AS total_chars
-          FROM documents GROUP BY source
-        ),
-        tot AS (SELECT count(*) AS t FROM documents)
-        SELECT source, n_docs, total_chars,
-               total_chars * 1.0d / n_docs AS avg_chars,
-               n_docs * 1.0d / (SELECT t FROM tot) AS corpus_share
-        FROM per
-    """,
-    "length_quantiles": """
-        SELECT source,
-               percentile(n_chars, 0.5d) AS p50_chars,
-               percentile(n_chars, 0.9d) AS p90_chars,
-               percentile(n_chars, 0.99d) AS p99_chars,
-               CAST(max(n_chars) AS BIGINT) AS max_chars,
-               CAST(count(*) AS BIGINT) AS n_docs
-        FROM documents GROUP BY source
-    """,
-    "hash_split_report": f"""
-        WITH s AS (
-          SELECT source,
-                 {_H60.format(
-                     "CAST(doc_id AS STRING) || '|' || 'split-v1'"
-                 )} % 100 AS b
+    "phrase_match_positions": """
+        WITH pos AS (
+          SELECT doc_id, pos0 + 1 AS pos, tok
           FROM documents
+          LATERAL VIEW posexplode(
+            regexp_extract_all(lower(text), '[a-z0-9]+', 0)) g AS pos0, tok
         )
-        SELECT source,
-               CASE WHEN b < 80 THEN 'train'
-                    WHEN b < 90 THEN 'val'
-                    ELSE 'test' END AS split,
-               CAST(count(*) AS BIGINT) AS n_docs
-        FROM s GROUP BY 1, 2
+        SELECT a.doc_id, CAST(a.pos AS INT) AS start_pos
+        FROM pos a JOIN pos b
+          ON a.doc_id = b.doc_id AND b.pos = a.pos + 1
+        WHERE a.tok = 'table' AND b.tok = 'hash'
     """,
-    "ann_ivf_l2_topk": f"""
-        WITH flat AS ({_EMB_MICRO}),
-        cflat AS (
-          SELECT vec_id AS cent_id, i, xi AS ci
-          FROM flat WHERE vec_id < {_IVF_C}
-        ),
-        cdots AS (
-          SELECT f.vec_id, c.cent_id, sum(f.xi * c.ci) AS cdot,
-                 sum(c.ci * c.ci) AS cnorm2
-          FROM flat f JOIN cflat c ON f.i = c.i
-          GROUP BY f.vec_id, c.cent_id
-        ),
-        ranked AS (
-          SELECT vec_id, cent_id,
-                 row_number() OVER (PARTITION BY vec_id
-                                    ORDER BY 2 * cdot - cnorm2 DESC, cent_id)
-                   AS crank
-          FROM cdots
-        ),
-        assign AS (SELECT vec_id, cent_id FROM ranked WHERE crank = 1),
-        probes AS (
-          SELECT vec_id AS query_id, cent_id
-          FROM ranked WHERE crank <= {_IVF_PROBE} AND vec_id < 5
-        ),
-        cand AS (
-          SELECT DISTINCT p.query_id, a.vec_id AS neighbor_id
-          FROM probes p JOIN assign a ON p.cent_id = a.cent_id
-          WHERE a.vec_id <> p.query_id
-        ),
-        dots AS (
-          SELECT cand.query_id, cand.neighbor_id,
-                 CAST(sum(qf.xi * nf.xi) AS DOUBLE) / 1e12 AS dot
-          FROM cand
-          JOIN flat qf ON qf.vec_id = cand.query_id
-          JOIN flat nf ON nf.vec_id = cand.neighbor_id AND nf.i = qf.i
-          GROUP BY cand.query_id, cand.neighbor_id
-        )
-        SELECT query_id, neighbor_id, dot, CAST(rnk AS INT) AS rank
-        FROM (SELECT query_id, neighbor_id, dot,
-                     row_number() OVER (PARTITION BY query_id
-                                        ORDER BY dot DESC, neighbor_id)
-                       AS rnk
-              FROM dots)
-        WHERE rnk <= 3
-    """,
-}
-
-# The KG graph-algorithm queries (fusion / PageRank / k-hop) were
-# written dialect-NEUTRAL from the start — every numeric literal CAST,
-# only ln/exp/least/round/coalesce/NOT IN, identical in DuckDB and
-# Spark SQL — so the oracle text IS the front-door text.
-from .queries import ORACLE_SQL as _ORACLE_SQL  # noqa: E402
-
-for _kg_q in (
-    "kg_triple_fusion",
-    "kg_pagerank",
-    "kg_khop_reach",
-    "kg_shortest_paths",
-    "kg_cooccurrence_pmi",
-    "kg_triangle_counts",
-    "kg_merge_delta",
-    "kg_snapshot_latest",
-    "kg_relation_compose",
-    "kg_entity_types",
-    "kg_degree_histogram",
-    "kg_constraint_violations",
-    "kg_reciprocity_report",
-    "kg_snapshot_diff",
-    "kg_fact_intervals",
-    "kg_belief_asof",
-    "kg_entity_profile",
-    "kg_node_similarity",
-    "kg_hits",
-):
-    SQL_QUERIES[_kg_q] = _ORACLE_SQL[_kg_q]
-del _kg_q
-
-# corpus_mix_sample's oracle differs only in the h60 rendering (DuckDB
-# hex cast vs Spark conv()) and the rate-dim CTE column list (Spark
-# VALUES takes the alias inline).
-SQL_QUERIES["corpus_mix_sample"] = f"""
-    WITH rates AS (
-      SELECT * FROM VALUES ('en', 400000), ('fr', 750000),
-                           ('zh', 1000000) AS t(lang, thresh)
-    )
-    SELECT d.doc_id, d.lang, d.source
-    FROM documents d LEFT JOIN rates r ON d.lang = r.lang
-    WHERE {_H60.format("CAST(d.doc_id AS STRING) || '|' || 'mix-v1'")}
-            % 1000000
-          < coalesce(r.thresh, 100000)
-"""
-
-# kg_random_walks: same unrolled skeleton as the oracle, with Spark's
-# list-function renderings (sort_array(collect_list) / element_at /
-# size) and h60 macro substituted.
-from .queries import _walks_sql as _walks  # noqa: E402
-
-SQL_QUERIES["kg_random_walks"] = _walks(
-    3,
-    listagg="sort_array(collect_list(dst))",
-    idx_fmt="element_at(nb.nbrs, CAST({0} AS INT))",
-    len_fn="size",
-    h60_fn=lambda e: _H60.format(e),
-)
-
-# kg_ntriples_export shares the fusion CTEs verbatim; the only
-# dialect-forced difference left is the escape regexp's 'g' flag
-# (Spark's 3-arg regexp_replace is global) — the confidence literal is
-# rendered via integer micro-units precisely so no printf/format_string
-# tie-rounding divergence exists between engines.
-SQL_QUERIES["kg_ntriples_export"] = (
-    _ORACLE_SQL["kg_ntriples_export"].replace(", '_', 'g')", ", '_')")
-)
-
-# benchmark_decontaminate's oracle builds n-grams with DuckDB list
-# functions (string_split_regex / generate_series / list_slice);
-# Spark renders the same algebra with split / sequence / slice /
-# array_join and an explicit empty-array guard (Spark's
-# sequence(1, 0) DESCENDS instead of returning empty).
-SQL_QUERIES["benchmark_decontaminate"] = r"""
-    WITH tok AS (
-      SELECT doc_id, split(trim(lower(text)), '\\s+') AS t
-      FROM documents WHERE text IS NOT NULL
-    ),
-    dg AS (
-      SELECT DISTINCT doc_id, array_join(slice(t, i, 5), ' ') AS ngram
-      FROM tok
-      LATERAL VIEW explode(
-        CASE WHEN size(t) >= 5 THEN sequence(1, size(t) - 4)
-             ELSE CAST(array() AS ARRAY<INT>) END) g AS i
-    ),
-    eg AS (SELECT DISTINCT ngram FROM dg WHERE doc_id % 97 = 0)
-    SELECT dg.doc_id, CAST(count(*) AS BIGINT) AS n_contaminated_ngrams
-    FROM dg JOIN eg ON dg.ngram = eg.ngram
-    GROUP BY dg.doc_id
-"""
-
-# kg_link_mentions is the one KG query whose oracle needs a dialect
-# twin: DuckDB explodes surface tokens via `unnest(string_split(..))`,
-# Spark via LATERAL VIEW explode(split(..)). Everything around the
-# explode is shared verbatim with the oracle text.
-from .queries import _pagerank_ctes as _pr_ctes  # noqa: E402
-
-SQL_QUERIES["kg_link_mentions"] = (
-    _pr_ctes(5)
-    + """,
+    "kg_link_mentions": spark_dialect(_pagerank_ctes(5) + """,
     pm AS (SELECT entity_id,
                   CAST(round(pr * 1000000) AS BIGINT) AS rank_micro
            FROM r5),
@@ -1174,101 +370,20 @@ SQL_QUERIES["kg_link_mentions"] = (
           FROM cand)
     SELECT mention, entity_id, rank_micro, n_candidates
     FROM r WHERE rn = 1
-    """
-)
-
-# community detection: the unrolled LPA oracle is dialect-neutral
-# (joins + windows only), shared verbatim like the other KG queries
-from .queries import _lpa_sql as _lpa  # noqa: E402
-
-SQL_QUERIES["kg_community_labels"] = _lpa(2)
-
-# lexical retrieval tier: dialect twins of the search oracles — the
-# only differences are unnest -> LATERAL VIEW (pos)explode and
-# generate_subscripts -> posexplode's 0-based index + 1
-_SEARCH_TOKS_SPARK = """
-      SELECT doc_id, tok
-      FROM documents
-      LATERAL VIEW explode(
-        regexp_extract_all(lower(text), '[a-z0-9]+', 0)) g AS tok
-"""
-
-SQL_QUERIES["tf_idf_top_terms"] = f"""
-    WITH toks AS ({_SEARCH_TOKS_SPARK}),
-    tf AS (SELECT doc_id, tok, CAST(count(*) AS BIGINT) AS tf
-           FROM toks GROUP BY doc_id, tok),
-    df AS (SELECT tok, CAST(count(*) AS BIGINT) AS df
-           FROM tf GROUP BY tok),
-    n AS (SELECT CAST(count(*) AS BIGINT) AS n_corpus FROM documents),
-    scored AS (
-      SELECT t.doc_id, t.tok, t.tf, d.df,
-             t.tf * (ln(CAST((SELECT n_corpus FROM n) + 1 AS DOUBLE)
-                        / CAST(d.df + 1 AS DOUBLE)) + 1.0) AS tf_idf
-      FROM tf t JOIN df d ON t.tok = d.tok
-    )
-    SELECT doc_id, CAST(rank AS INT) AS rank, tok AS term, tf, df,
-           CAST(tf_idf AS DOUBLE) AS tf_idf
-    FROM (SELECT *, row_number() OVER (PARTITION BY doc_id
-                                       ORDER BY tf_idf DESC, tok) AS rank
-          FROM scored) s
-    WHERE rank <= 5
-"""
-
-from .queries import _BM25_TERMS as _BM25  # noqa: E402
-
-SQL_QUERIES["bm25_topk"] = f"""
-    WITH toks AS ({_SEARCH_TOKS_SPARK}),
-    dl AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS dl
-           FROM toks GROUP BY doc_id),
-    stats AS (SELECT CAST(count(*) AS BIGINT) AS n_corpus,
-                     CAST(sum(dl) AS DOUBLE) / CAST(count(*) AS DOUBLE)
-                       AS avgdl
-              FROM dl),
-    tf AS (SELECT doc_id, tok, CAST(count(*) AS BIGINT) AS tf
-           FROM toks WHERE tok IN {_BM25!r}
-           GROUP BY doc_id, tok),
-    df AS (SELECT tok, CAST(count(*) AS BIGINT) AS df
-           FROM tf GROUP BY tok),
-    idf AS (
-      SELECT tok,
-             ln(1.0 + (CAST((SELECT n_corpus FROM stats) AS DOUBLE)
-                       - CAST(df AS DOUBLE) + 0.5)
-                      / (CAST(df AS DOUBLE) + 0.5)) AS idf
-      FROM df
+    """),
+    "kg_random_walks": spark_dialect(
+        _walks_sql(3, listagg="sort_array(collect_list(dst))")
     ),
-    per AS (
-      SELECT t.doc_id,
-             i.idf * (CAST(t.tf AS DOUBLE) * (1.2 + 1.0))
-             / (CAST(t.tf AS DOUBLE)
-                + 1.2 * ((1.0 - 0.75)
-                         + 0.75 * CAST(d.dl AS DOUBLE)
-                           / (SELECT avgdl FROM stats))) AS s
-      FROM tf t JOIN idf i ON t.tok = i.tok
-                JOIN dl d ON t.doc_id = d.doc_id
-    ),
-    scored AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_terms_hit,
-                      sum(s) AS score
-               FROM per GROUP BY doc_id)
-    SELECT CAST(rank AS INT) AS rank, doc_id, n_terms_hit,
-           CAST(score AS DOUBLE) AS score
-    FROM (SELECT *, row_number() OVER (ORDER BY score DESC, doc_id)
-                    AS rank
-          FROM scored) s
-    WHERE rank <= 10
-"""
+}
 
-SQL_QUERIES["phrase_match_positions"] = """
-    WITH pos AS (
-      SELECT doc_id, pos0 + 1 AS pos, tok
-      FROM documents
-      LATERAL VIEW posexplode(
-        regexp_extract_all(lower(text), '[a-z0-9]+', 0)) g AS pos0, tok
-    )
-    SELECT a.doc_id, CAST(a.pos AS INT) AS start_pos
-    FROM pos a JOIN pos b
-      ON a.doc_id = b.doc_id AND b.pos = a.pos + 1
-    WHERE a.tok = 'table' AND b.tok = 'hash'
-"""
+# Spark-dialect SQL for every oracle query that has a SQL rendering,
+# column-for-column aliased like the DataFrame queries (queries.py) so
+# results hash-compare equal.
+SQL_QUERIES = {
+    name: SPARK_SQL.get(name) or spark_dialect(text)
+    for name, text in ORACLE_SQL.items()
+    if name not in NOT_SQL
+}
 
 
 def sql_query(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
