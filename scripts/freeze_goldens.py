@@ -8,6 +8,12 @@ would drift together). The frozen goldens pin the kernel itself:
 tests/test_goldens.py recomputes the oracle and compares. If a kernel
 change is INTENTIONAL (e.g. swapping in real UIE weights), rerun this
 script and commit the diff.
+
+The committed goldens were frozen under OPENBLAS_CORETYPE=SKYLAKEX
+(AVX-512, the family core.preferred_blas_coretype picks on such hosts).
+Float outputs depend on the OpenBLAS kernel family, so freeze and
+compare under the same coretype: a run under another family (e.g.
+HASWELL on an AVX2-only host) can mismatch with no kernel change.
 """
 
 from __future__ import annotations

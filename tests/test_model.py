@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
 
 from uie_pytorch_spark.core.model import TinyUIE, forward_bucketed, get_model
@@ -125,9 +127,10 @@ def test_blas_env_vars_deterministic_and_injected(spark):
     env1, env2 = blas_env_vars(), blas_env_vars()
     assert env1 == env2
     assert env1["OPENBLAS_NUM_THREADS"] == "1"
-    ct = preferred_blas_coretype()
-    if ct is not None:
-        assert env1["OPENBLAS_CORETYPE"] in ("SKYLAKEX", "HASWELL")
+    # an explicit OPENBLAS_CORETYPE in the environment overrides the
+    # cpuinfo-derived family
+    ct = os.environ.get("OPENBLAS_CORETYPE") or preferred_blas_coretype()
+    assert env1.get("OPENBLAS_CORETYPE") == ct
 
     UIEEngine(spark, {"subject entity": ["related fact"]})
     sc_env = spark.sparkContext.environment

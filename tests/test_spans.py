@@ -8,10 +8,8 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from refimport import load_reference_utils
+from refimport import reference_utils as ref
 from uie_pytorch_spark.core import spans as S
-
-ref = load_reference_utils()
 
 
 # ---------- threshold (utils.py:125-151) ----------

@@ -49,11 +49,6 @@ def main(argv=None):
              "to executors via SparkFiles",
     )
     ap.add_argument(
-        "--backend", default="numpy", choices=("numpy", "torch", "onnx"),
-        help="inference backend inside the UDF (torch/onnx need the "
-             "libs on executors)",
-    )
-    ap.add_argument(
         "--tokenizer", default="char",
         help="'char' | 'wordpiece-en' | 'wordpiece-en@<vocab.txt>' "
              "(vocab file shipped like the model artifact)",
@@ -99,7 +94,6 @@ def main(argv=None):
         position_prob=args.position_prob,
         max_seq_len=args.max_seq_len,
         model_path=args.model_path,
-        backend=args.backend,
         tokenizer=args.tokenizer,
     )
 

@@ -301,7 +301,7 @@ def forward_bucketed(
 
 
 # ---------------------------------------------------------------------
-# Model artifact (save / ship / load) + backend dispatch
+# Model artifact (save / ship / load)
 #
 # The swap-in seam for real weights: save_weights() writes a .npz
 # artifact; ship it to executors with spark.sparkContext.addFile() (or
@@ -309,8 +309,8 @@ def forward_bucketed(
 # UIEConfig(model_path=...) — the executor singleton then loads the
 # artifact from disk instead of regenerating from the seed. Mirrors the
 # reference's checkpoint load (convert.py:318-337, loads state_dict
-# from a directory) and backend selection (uie_predictor.py:78-117:
-# torch-GPU / torch-CPU / ONNX, fp16 optional).
+# from a directory). It is the only seam for real weights: a real
+# checkpoint, converted to the same .npz layout, arrives the same way.
 # ---------------------------------------------------------------------
 
 _BLOCK_KEYS = (
@@ -399,137 +399,23 @@ def resolve_artifact(path: str) -> str:
     )
 
 
-BACKENDS = ("numpy", "torch", "onnx")
-
-
-def _torch_backend(base: TinyUIE):
-    """Torch execution of the same math (GPU slot-in point; reference
-    uie_predictor.py:78-96). Import-guarded: torch is not in this
-    sandbox, so this branch is exercised only on real deployments."""
-    import torch  # noqa: F401 — raises ImportError when unavailable
-
-    class TorchUIE:
-        def __init__(self, m: TinyUIE):
-            dev = "cuda" if torch.cuda.is_available() else "cpu"
-            self._dev = dev
-            self.seed = m.seed
-            self.heads = m.heads
-            self.h = m.h
-            self.dk = m.dk
-            self.pos_emb = m.pos_emb  # numpy view for bucket sizing
-            t = lambda a: torch.from_numpy(np.ascontiguousarray(a)).to(dev)
-            self._tok = t(m.tok_emb)
-            self._pos = t(m.pos_emb)
-            self._seg = t(m.seg_emb)
-            self._blocks = [
-                {k: t(blk[k]) for k in _BLOCK_KEYS} for blk in m.blocks
-            ]
-            self._ws, self._bs = t(m.w_start), float(m.b_start)
-            self._we, self._be = t(m.w_end), float(m.b_end)
-
-        @torch.no_grad()
-        def forward(self, input_ids, token_type_ids, attention_mask):
-            ids = torch.from_numpy(input_ids).to(self._dev)
-            tt = torch.from_numpy(token_type_ids).to(self._dev)
-            am = torch.from_numpy(attention_mask).to(self._dev)
-            B, L = ids.shape
-            x = self._tok[ids] + self._pos[:L][None] + self._seg[tt]
-            neg = torch.where(
-                am[:, None, None, :] == 0,
-                torch.tensor(-1e9, device=self._dev),
-                torch.tensor(0.0, device=self._dev),
-            )
-            for blk in self._blocks:
-                q = (x @ blk["wq"]).view(B, L, self.heads, self.dk).transpose(1, 2)
-                k = (x @ blk["wk"]).view(B, L, self.heads, self.dk).transpose(1, 2)
-                v = (x @ blk["wv"]).view(B, L, self.heads, self.dk).transpose(1, 2)
-                scores = q @ k.transpose(-1, -2) / (self.dk ** 0.5) + neg
-                ctx = (torch.softmax(scores, -1) @ v).transpose(1, 2).reshape(B, L, self.h)
-                x = torch.nn.functional.layer_norm(
-                    x + ctx @ blk["wo"], (self.h,), blk["ln1_g"], blk["ln1_b"], 1e-5
-                )
-                ff = torch.nn.functional.gelu(
-                    x @ blk["w1"] + blk["b1"], approximate="tanh"
-                ) @ blk["w2"] + blk["b2"]
-                x = torch.nn.functional.layer_norm(
-                    x + ff, (self.h,), blk["ln2_g"], blk["ln2_b"], 1e-5
-                )
-            sp = torch.sigmoid(x @ self._ws[:, 0] + self._bs)
-            ep = torch.sigmoid(x @ self._we[:, 0] + self._be)
-            keep = am.float() * (~((ids == 1) | (ids == 2))).float()
-            return (
-                (sp * keep).cpu().numpy().astype(np.float32),
-                (ep * keep).cpu().numpy().astype(np.float32),
-            )
-
-    return TorchUIE(base)
-
-
-def _onnx_backend(model_path: str):
-    """ONNX Runtime session backend (reference uie_predictor.py:149-198
-    / export_model.py). Import-guarded; expects a .onnx artifact with
-    the reference's input/output names."""
-    import onnxruntime as ort  # raises ImportError when unavailable
-
-    class OnnxUIE:
-        def __init__(self, path: str):
-            self._sess = ort.InferenceSession(
-                path, providers=["CPUExecutionProvider"]
-            )
-            self.pos_emb = np.zeros((512, 1), dtype=np.float32)  # bucket sizing
-
-        def forward(self, input_ids, token_type_ids, attention_mask):
-            s, e = self._sess.run(
-                None,
-                {
-                    "input_ids": input_ids,
-                    "token_type_ids": token_type_ids,
-                    "attention_mask": attention_mask,
-                },
-            )
-            # Same post-sigmoid keep-mask as the numpy/torch backends
-            # (zero padding + CLS/SEP positions): an exported .onnx of
-            # the raw encoder must not reintroduce pad-garbage spans.
-            keep = attention_mask.astype(np.float32) * (
-                ~((input_ids == 1) | (input_ids == 2))
-            ).astype(np.float32)
-            return (
-                (s.astype(np.float32) * keep),
-                (e.astype(np.float32) * keep),
-            )
-
-    return OnnxUIE(model_path)
-
-
-_CACHE: Dict[tuple, object] = {}
+_CACHE: Dict[tuple, TinyUIE] = {}
 _LOCK = threading.Lock()
 
 
-def get_model(
-    seed: int = DEFAULT_SEED,
-    model_path: str | None = None,
-    backend: str = "numpy",
-):
+def get_model(seed: int = DEFAULT_SEED, model_path: str | None = None):
     """Per-process lazy singleton — the Spark analogue of the
     reference's load-once predictor (uie_predictor.py:153-158); each
     executor Python worker loads/builds the weights exactly once per
-    (seed, artifact, backend) combination."""
-    if backend not in BACKENDS:
-        raise ValueError(f"backend must be one of {BACKENDS}, got {backend!r}")
-    key = (seed, model_path, backend)
+    (seed, artifact) combination."""
+    key = (seed, model_path)
     with _LOCK:
         m = _CACHE.get(key)
         if m is None:
-            if backend == "onnx":
-                if model_path is None:
-                    raise ValueError("backend='onnx' requires model_path")
-                m = _onnx_backend(resolve_artifact(model_path))
-            else:
-                base = (
-                    load_weights(resolve_artifact(model_path))
-                    if model_path
-                    else TinyUIE(seed=seed)
-                )
-                m = base if backend == "numpy" else _torch_backend(base)
+            m = (
+                load_weights(resolve_artifact(model_path))
+                if model_path
+                else TinyUIE(seed=seed)
+            )
             _CACHE[key] = m
         return m

@@ -16,13 +16,19 @@ Design notes for 100 TB scale:
   * Inference is the dominant cost; identical (prompt, chunk) pairs
     are deduplicated BEFORE the UDF (web corpora repeat boilerplate),
     keyed by xxhash64 — results join back to all owners.
-  * The only shuffles per stage are the dedup distinct, the join back
-    (AQE decides broadcast vs shuffle; the unique-inputs side is
-    usually far smaller), and a tiny groupBy for classification votes.
-    Span results never need a groupBy — offsets are computed from the
-    chunk index natively.
-  * Only (prompt, chunk_text, key) columns enter Python; document
-    blobs (html) never cross the Arrow boundary (column pruning).
+  * The shuffles per stage are the dedup distinct, a
+    repartition(defaultParallelism, "key") of the unique inputs right
+    before the UDF (so AQE cannot coalesce the model work onto one
+    core), the join back (AQE decides broadcast vs shuffle; the
+    unique-inputs side is usually far smaller), and, only when the
+    model decoded classification answers, one repartition by
+    (doc_id, ex_id) that serves the whole vote chain. Span results
+    never need a groupBy — offsets are computed from the chunk index
+    natively. Each stage also runs one driver-side ``isEmpty`` probe
+    job on the persisted records to decide whether the vote runs.
+  * Only (key, key2, prompt, chunk_text) columns enter Python;
+    document blobs (html) never cross the Arrow boundary (column
+    pruning).
   * Every stage output carries its parent span's identity columns, so
     (subj, pred, obj) triples materialize as plain projections — no
     nested structures are ever shuffled.
@@ -87,21 +93,20 @@ def _make_infer_udf(
     seed: int,
     max_seq_len: int,
     position_prob: float,
-    acc_rows=None,
-    acc_spans=None,
+    acc_rows,
+    acc_spans,
     model_path: Optional[str] = None,
-    backend: str = "numpy",
     tokenizer: str = "char",
 ):
-    """mapInArrow kernel: unique (key, prompt, chunk_text) rows in,
+    """mapInArrow kernel: unique (key, key2, prompt, chunk_text) rows in,
     one row per decoded span record out. Arrow RecordBatches directly
     (mapInArrow) — measured ~1.5x faster than mapInPandas for this
     string-heavy workload (no pandas Series materialization on either
     side). The model is a per-worker lazy singleton (reference loads
     weights once per process, uie_predictor.py:153-158).
 
-    ``acc_rows``/``acc_spans`` are optional Spark accumulators counting
-    model inputs and emitted spans — free ops metrics (approximate
+    ``acc_rows``/``acc_spans`` are Spark accumulators counting model
+    inputs and emitted spans — free ops metrics (approximate
     under task retries)."""
 
     def infer(batches):
@@ -111,12 +116,11 @@ def _make_infer_udf(
         from uie_pytorch_spark.core.infer import infer_decode_batch
         from uie_pytorch_spark.core.model import get_model
 
-        model = get_model(seed, model_path=model_path, backend=backend)
+        model = get_model(seed, model_path=model_path)
         for rb in batches:
             if rb.num_rows == 0:
                 continue
-            if acc_rows is not None:
-                acc_rows.add(rb.num_rows)
+            acc_rows.add(rb.num_rows)
             records = infer_decode_batch(
                 model,
                 rb.column("prompt").to_pylist(),
@@ -142,8 +146,7 @@ def _make_infer_udf(
                     ends.append(r["end"])
                     probs.append(r["prob"])
                     clss.append(r["is_cls"])
-            if acc_spans is not None:
-                acc_spans.add(len(keys))
+            acc_spans.add(len(keys))
             yield pa.RecordBatch.from_arrays(
                 [
                     pa.array(keys, pa.int64()),
@@ -175,10 +178,6 @@ class UIEConfig:
     # shipped to executors via sc.addFile / --files / spark.archives;
     # None -> regenerate TinyUIE from `seed` in-process.
     model_path: Optional[str] = None
-    # execution backend inside the UDF: numpy (always available) |
-    # torch (GPU slot-in) | onnx — torch/onnx are import-guarded
-    # (reference uie_predictor.py:78-117, 149-198).
-    backend: str = "numpy"
     # tokenization inside the UDF: 'char' (default; exact for zh — the
     # reference's BERT tokenizer is per-character for Chinese),
     # 'wordpiece-en' (BERT-style basic split + greedy longest-match
@@ -235,7 +234,6 @@ class UIEEngine:
             acc_rows=self.acc_infer_rows,
             acc_spans=self.acc_spans_out,
             model_path=self.config.model_path,
-            backend=self.config.backend,
             tokenizer=self.config.tokenizer,
         )
         self._stage_caches: List[DataFrame] = []
